@@ -27,6 +27,19 @@ import org.apache.spark.sql.SparkSession
   *    net -3.7% over the 32-query subset in r18). Scale-safe: AQE skew
   *    split still applies to SHJ and the per-partition build side
   *    shrinks as partition count grows with the data.
+  *  - `spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing
+  *    .enabled=true` (a constant, no env var): a RocksDB state commit
+  *    writes a per-partition changelog of the batch's updates; full
+  *    snapshots are taken every N versions and uploaded in the
+  *    background instead of on every commit. It only affects sessions
+  *    that choose the RocksDB provider (StreamBench, WatermarkStateAB,
+  *    the benchmark's `ingest` workload); an off switch would be a
+  *    second commit path nobody picks. Restarting a snapshot-only
+  *    checkpoint under it is safe (StatefulLedgerSpec). Measured on
+  *    the benchmark's traced `ingest` run (local[4] on a 4-core host,
+  *    median of seeds 7-9): state commit time per micro-batch, summed
+  *    over the 4 state partitions, 583 → 304 ms with this setting
+  *    alone (batch wall 0.83 → 0.79 s).
   *
   * Master is `local[$SPARK_GRAFT_CPUS]` with shuffle partitions = the
   * core count (the driver contract: it re-runs the bench at a lower
@@ -55,5 +68,7 @@ object GraftSession {
         sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
       .config("spark.sql.join.preferSortMergeJoin",
         sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
+      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+        "true")
   }
 }

@@ -17,13 +17,13 @@ import graft.plans.GraftExtensions
   * agent fallback chain P4, deterministic event id P5, notes P6,
   * dedup key P7, outbound filter F1, metric classification F2 with
   * unknown→drop, HubSpot scaffold + metric mapping P12, source
-  * routing F4 as a partitioned union.
+  * routing F4 as one pass that picks each row's adapter by source.
   */
 object Adapters {
 
-  /** Event-name → MetricID mapping (reference `src/domain/mapping.ts`). */
-  val alowareToMetric: Map[String, String] =
-    Map("outbound_call" -> "CALLS", "outbound_text" -> "TEXTS")
+  /** HubSpot event-name → MetricID mapping (reference
+    * `src/domain/mapping.ts`); Aloware names classify by pattern in
+    * [[inferMetric]]. */
   val hubspotToMetric: Map[String, String] =
     Map("email_sent" -> "EMAILS", "case_created" -> "CASES")
 
@@ -72,38 +72,37 @@ object Adapters {
       .when(tpe === 1, lit("CALLS"))
       .otherwise(lit(null).cast("string"))
 
+  /** One source's adapter as expressions over the parsed body `j`,
+    * the lowered event `name` and the source's own `metricId`:
+    * `keep` gates the rows, the rest are the FactEvent columns. */
+  private final case class SourceCols(
+      metricId: Column, keep: Column, eventId: Column, agentId: Column,
+      factDateKey: Column, notes: Column)
+
   /** Aloware webhook → FactEvent rows (≤1 per envelope). */
-  def aloware(envelopes: DataFrame): DataFrame = {
-    GraftExtensions.register(envelopes.sparkSession)
-    val name = lower(coalesce(col("j.parsedBody.event"), col("j.event"), lit("")))
+  private val alowareCols: SourceCols = {
     val tzRaw = p("contact").getField("timezone")
     val eventTime = coalesce(parseCreatedAt(p("created_at")), col("receivedAt"))
     val agentId = coalesce(p("owner_id").cast("string"),
       p("user_id").cast("string"), lit("unknown"))
-    envelopes
-      .withColumn("j", from_json(col("body"), Schemas.alowareBody))
-      .withColumn("name", name)
-      .withColumn("metricId", inferMetric(col("name"), p("type")))
-      .filter(isOutbound(col("name"), p("direction")) && col("metricId").isNotNull)
-      .select(
-        // P5 id chain ends in the delivery-id header BEFORE the
-        // receive time: a redelivered webhook keeps its delivery id
-        // but gets a new receivedAt, so the header keeps retried
-        // no-payload-id events deduplicable (P7 keys off eventId).
-        concat(lit("ALOWARE:"), coalesce(p("id").cast("string"), p("uuid_v4"),
-          deliveryId,
-          unix_millis(col("receivedAt")).cast("string"))).as("eventId"),
-        agentId.as("agentId"),
-        call_function("graft_date_key", eventTime, coalesce(tzRaw, lit("UTC")))
-          .cast("date").as("factDateKey"),
-        col("metricId"),
-        concat_ws(";",
-          concat(lit("event="), col("name")),
-          when(tzRaw.isNotNull, concat(lit("tz="), tzRaw)),
-          when(deliveryId.isNotNull, concat(lit("delivery="), deliveryId)),
-          when(agentId === "unknown", lit("agent=unknown"))).as("notes"),
-        col("source"), col("receivedAt"))
-      .withColumn("dedupKey", concat_ws(":", col("source"), col("eventId")))
+    SourceCols(
+      metricId = inferMetric(col("name"), p("type")),
+      keep = isOutbound(col("name"), p("direction")),
+      // P5 id chain ends in the delivery-id header BEFORE the
+      // receive time: a redelivered webhook keeps its delivery id
+      // but gets a new receivedAt, so the header keeps retried
+      // no-payload-id events deduplicable (P7 keys off eventId).
+      eventId = concat(lit("ALOWARE:"), coalesce(p("id").cast("string"), p("uuid_v4"),
+        deliveryId,
+        unix_millis(col("receivedAt")).cast("string"))),
+      agentId = agentId,
+      factDateKey = call_function("graft_date_key", eventTime,
+        coalesce(tzRaw, lit("UTC"))).cast("date"),
+      notes = concat_ws(";",
+        concat(lit("event="), col("name")),
+        when(tzRaw.isNotNull, concat(lit("tz="), tzRaw)),
+        when(deliveryId.isNotNull, concat(lit("delivery="), deliveryId)),
+        when(agentId === "unknown", lit("agent=unknown"))))
   }
 
   /** HubSpot webhook → FactEvent rows. The reference adapter is a
@@ -111,28 +110,61 @@ object Adapters {
     * (`src/adapters/hubspot.adapter.ts`); we honor that default but
     * apply the declared name→metric mapping (P12) when the payload
     * carries a recognizable event name. */
-  def hubspot(envelopes: DataFrame): DataFrame = {
-    val name = lower(coalesce(col("j.parsedBody.event"), col("j.event"), lit("")))
-    val metricMap = typedLit(hubspotToMetric)
+  private val hubspotCols: SourceCols = SourceCols(
+    metricId = coalesce(element_at(typedLit(hubspotToMetric), col("name")),
+      lit("EMAILS")),
+    keep = lit(true),
+    eventId = concat(lit("HUBSPOT:"), coalesce(p("id").cast("string"),
+      deliveryId,
+      unix_millis(col("receivedAt")).cast("string"))),
+    agentId = lit("unknown@hubspot"),
+    factDateKey = col("receivedAt").cast("date"),
+    notes = lit("example event (scaffold)"))
+
+  /** Applies per-source adapters in ONE pass over `envelopes`: the
+    * body is parsed once, every output column picks its source's
+    * expression with `when(is, …)`, and one filter keeps a row when
+    * it has a metric (F2's unknown→drop; HubSpot always has one) and
+    * its source's `keep` gate holds. The last adapter needs no guard:
+    * the filter has already dropped rows no guard admits. */
+  private def adapt(envelopes: DataFrame, sources: Seq[(Column, SourceCols)]): DataFrame = {
+    GraftExtensions.register(envelopes.sparkSession)
+    def pick(f: SourceCols => Column): Column =
+      sources.init.foldRight(f(sources.last._2)) {
+        case ((is, s), rest) => when(is, f(s)).otherwise(rest)
+      }
     envelopes
       .withColumn("j", from_json(col("body"), Schemas.alowareBody))
+      .withColumn("name", lower(coalesce(col("j.parsedBody.event"), col("j.event"), lit(""))))
+      .withColumn("metricId", pick(_.metricId))
+      .filter(col("metricId").isNotNull &&
+        sources.map { case (is, s) => is && s.keep }.reduce(_ || _))
       .select(
-        concat(lit("HUBSPOT:"), coalesce(p("id").cast("string"),
-          deliveryId,
-          unix_millis(col("receivedAt")).cast("string"))).as("eventId"),
-        lit("unknown@hubspot").as("agentId"),
-        col("receivedAt").cast("date").as("factDateKey"),
-        coalesce(element_at(metricMap, name), lit("EMAILS")).as("metricId"),
-        lit("example event (scaffold)").as("notes"),
+        pick(_.eventId).as("eventId"),
+        pick(_.agentId).as("agentId"),
+        pick(_.factDateKey).as("factDateKey"),
+        col("metricId"),
+        pick(_.notes).as("notes"),
         col("source"), col("receivedAt"))
       .withColumn("dedupKey", concat_ws(":", col("source"), col("eventId")))
   }
 
-  /** F4: route by source and union the per-source outputs — the
-    * orchestrator's adapter dispatch as a partitioned union
-    * (SURVEY §2.3 F4, §2.7 O2). Unknown sources are dropped (the
-    * entrypoints 400 them before the dataflow). */
-  def route(envelopes: DataFrame): DataFrame =
-    aloware(envelopes.filter(upper(col("source")) === "ALOWARE"))
-      .unionByName(hubspot(envelopes.filter(upper(col("source")) === "HUBSPOT")))
+  /** Every envelope read as an Aloware webhook. */
+  def aloware(envelopes: DataFrame): DataFrame =
+    adapt(envelopes, Seq(lit(true) -> alowareCols))
+
+  /** Every envelope read as a HubSpot webhook. */
+  def hubspot(envelopes: DataFrame): DataFrame =
+    adapt(envelopes, Seq(lit(true) -> hubspotCols))
+
+  /** F4: route by source — the orchestrator's adapter dispatch
+    * (SURVEY §2.3 F4, §2.7 O2) as one scan, one JSON parse and one
+    * filter per envelope; the outbound gate applies to ALOWARE rows
+    * only. Unknown sources are dropped (the entrypoints 400 them
+    * before the dataflow). */
+  def route(envelopes: DataFrame): DataFrame = {
+    val source = upper(col("source"))
+    adapt(envelopes,
+      Seq((source === "ALOWARE") -> alowareCols, (source === "HUBSPOT") -> hubspotCols))
+  }
 }

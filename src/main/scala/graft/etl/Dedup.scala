@@ -26,13 +26,6 @@ object Dedup {
       .drop("__rk")
   }
 
-  /** Unordered variant for when any representative row will do —
-    * cheaper (hash-agg instead of sort-window) and what Spark's
-    * `dropDuplicates` gives; use ONLY where payloads of duplicate
-    * keys are known identical (SURVEY §7 hard-part e). */
-  def withinBatchAny(df: DataFrame, key: String): DataFrame =
-    df.dropDuplicates(key)
-
   /** D2 — cross-request idempotency ledger, batch-replay form: admit
     * only events whose `dedupKey` has no *live* ledger entry
     * (TTL-expired keys readmit, `docs/dynamodb_schema.md:28-32`).

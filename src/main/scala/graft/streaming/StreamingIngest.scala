@@ -27,6 +27,24 @@ import graft.etl.{Adapters, Dedup, PushSink, RosterGate}
   * [[WatermarkCalibration.calibrate]] — the documented default — not
   * share the TTL. See WatermarkCalibration's scaladoc for why the
   * two constants differ by ~5000× on a healthy transport.
+  *
+  * Per-micro-batch fixed cost: at realistic rates freshness is set by
+  * what every batch pays whatever its size, not by row work. Three
+  * such costs are designed out: [[Adapters.route]] reads the source
+  * once (one scan, one JSON parse per envelope — not a union of two
+  * per-source branches over the same spool), [[RosterGate]] does not
+  * deduplicate its broadcast side (a stream re-plans that static side
+  * every batch, and a `distinct()` there ran one shuffle job per
+  * batch), and RocksDB commits write changelogs
+  * ([[graft.GraftSession]]). Per batch on the benchmark's traced
+  * `ingest` run (2,000 envelopes/s offered, local[4] on a 4-core
+  * host, median of seeds 7-9), before → after:
+  *  - jobs 3 → 2, stages 6 → 4, tasks 25 → 15;
+  *  - input rows twice the envelopes → equal to them;
+  *  - query planning 62 → 42 ms;
+  *  - state commit, summed over the 4 state partitions, 583 → 295 ms;
+  *  - job wall 467 → 299 ms, driver time between jobs 372 → 292 ms;
+  *  - batch wall 0.83 → 0.59 s.
   */
 object StreamingIngest {
 

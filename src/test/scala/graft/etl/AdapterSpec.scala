@@ -3,6 +3,7 @@ package graft.etl
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, upper}
 
 import graft.SparkSpec
 
@@ -161,5 +162,56 @@ class AdapterSpec extends SparkSpec {
     val out = Adapters.route(both)
     out.count() shouldBe 2
     out.select("source").as[String].collect().sorted shouldBe Array("ALOWARE", "HUBSPOT")
+  }
+
+  /** Every routing edge in one frame: both ALOWARE casings, HUBSPOT,
+    * an unknown source, inbound, an unknown event, malformed bodies
+    * and missing (null) headers. */
+  private def mixed: DataFrame = {
+    val at = Timestamp.from(java.time.Instant.parse(recv))
+    Seq(
+      ("ALOWARE", "map('X-Delivery-Id','d1')", canonical),
+      ("aloware", "map('x-request-id','r2')",
+        """{"event":"outbound_text","body":{"id":2,"owner_id":5}}"""),
+      ("ALOWARE", "map()", """{"event":"inbound_call","body":{"id":3,"type":1}}"""),
+      ("ALOWARE", "map()", """{"event":"outbound_meeting","body":{"id":4,"direction":2}}"""),
+      ("ALOWARE", "NULL", """{"event":"outbound_call"""),
+      ("ALOWARE", "NULL",
+        """{"event":"outbound_call","body":{"type":1}}"""),
+      ("HUBSPOT", "map('x-delivery-id','h1')", """{"event":"case_created","id":11}"""),
+      ("hubspot", "NULL", """{}"""),
+      ("HUBSPOT", "map()", "not json at all"),
+      ("MYSTERY", "map()", canonical))
+      .map { case (src, hdrs, body) =>
+        Seq((src, body, at)).toDF("source", "body", "receivedAt")
+          .selectExpr("source", s"CAST($hdrs AS MAP<STRING,STRING>) AS headers",
+            "body", "receivedAt")
+      }
+      .reduce(_ union _)
+  }
+
+  test("route equals the union of the per-source adapters, row for row") {
+    val envs = mixed
+    val union =
+      Adapters.aloware(envs.filter(upper(col("source")) === "ALOWARE"))
+        .unionByName(Adapters.hubspot(envs.filter(upper(col("source")) === "HUBSPOT")))
+    val out = Adapters.route(envs)
+    out.columns.toSeq shouldBe union.columns.toSeq
+    out.schema shouldBe union.schema
+    val got = out.collect().map(_.toSeq)
+    got should contain theSameElementsAs union.collect().map(_.toSeq)
+    // 2 admitted ALOWARE casings + the id-less ALOWARE call; inbound,
+    // unknown event, malformed ALOWARE and MYSTERY drop; all 3 HUBSPOT emit
+    got.length shouldBe 6
+  }
+
+  test("route over a file source scans it once") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft-route-scan")
+    mixed.write.mode("overwrite").json(dir.toString)
+    val envs = spark.read.schema(mixed.schema).json(dir.toString)
+    val out = Adapters.route(envs)
+    out.queryExecution.optimizedPlan.collectLeaves() should have length 1
+    out.count() shouldBe 6
   }
 }

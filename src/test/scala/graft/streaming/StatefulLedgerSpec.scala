@@ -127,4 +127,61 @@ class StatefulLedgerSpec extends SparkSpec {
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
+
+  test("RocksDB ledger restarts from a snapshot-only checkpoint into changelog " +
+      "checkpointing: in-TTL redeliveries stay dropped, new keys admit") {
+    // GraftSession turns changelog checkpointing on for every RocksDB
+    // session, so a ledger checkpointed before that switch must resume
+    // under it (and keep resuming) without losing a live entry
+    import java.nio.file.{Files, Path}
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val changelog = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    val prev = Seq(provider, changelog).map(k => k -> spark.conf.getOption(k))
+    val in = Files.createTempDirectory("graft-ledger-cl-in")
+    val chk = Files.createTempDirectory("graft-ledger-cl-chk")
+    val out = Files.createTempDirectory("graft-ledger-cl-out")
+    def json(key: String, id: String, at: String) =
+      s"""{"dedupKey":"$key","eventId":"$id","receivedAt":"$at"}"""
+    def changelogFiles(): Long = {
+      val files = Files.walk(chk)
+      try files.filter((p: Path) => p.toString.endsWith(".changelog")).count()
+      finally files.close()
+    }
+    def run(withChangelog: Boolean, file: String, lines: String*): Unit = {
+      spark.conf.set(changelog, withChangelog.toString)
+      Files.writeString(in.resolve(file), lines.mkString("", "\n", "\n"))
+      val q = StatefulLedger.admitFirst(
+          spark.readStream
+            .schema("dedupKey STRING, eventId STRING, receivedAt TIMESTAMP")
+            .json(in.toString),
+          ttlDays = 14)
+        .toDF()
+        .writeStream.format("parquet")
+        .option("path", out.toString)
+        .option("checkpointLocation", chk.toString)
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    spark.conf.set(provider,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try {
+      run(withChangelog = false, "a.json",
+        json("K1", "e1", "2024-01-01T10:00:00"),
+        json("K2", "e2", "2024-01-01T10:00:01"))
+      changelogFiles() shouldBe 0
+      run(withChangelog = true, "b.json",
+        json("K1", "e3", "2024-01-05T09:00:00"), // in-TTL dup of a pre-switch key
+        json("K3", "e4", "2024-01-05T09:00:01")) // new key
+      changelogFiles() should be > 0L
+      run(withChangelog = true, "c.json",
+        json("K1", "e5", "2024-01-06T09:00:00"), // still in TTL
+        json("K3", "e6", "2024-01-06T09:00:01"), // dup of a post-switch key
+        json("K4", "e7", "2024-01-06T09:00:02")) // new key
+      spark.read.parquet(out.toString).select("eventId")
+        .as[String].collect().toSet shouldBe Set("e1", "e2", "e4", "e7")
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
